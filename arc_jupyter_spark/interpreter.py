@@ -34,7 +34,7 @@ from arc_jupyter_spark.operators.metadata import (
 )
 from arc_jupyter_spark.plans.pipeline import parse_pipeline, run_pipeline
 from arc_jupyter_spark.plans.sqlparams import inject_parameters
-from arc_jupyter_spark.render import render_html, render_text
+from arc_jupyter_spark.render import render_html, render_text, take_formatted
 from arc_jupyter_spark.streaming.preview import preview_stream
 
 # Plain-text secrets are rejected from cell bodies
@@ -115,9 +115,8 @@ class Interpreter:
         ctx: ArcContext | None = None,
         spark=None,
         input_fn: Callable[[str], str] | None = None,
-        html: bool = True,
         restart_on_master_change: bool = False,
-        session_factory: Callable[[str], Any] | None = None,
+        session_factory: Callable[[str, Any], Any] | None = None,
     ) -> None:
         if ctx is None:
             if spark is None:
@@ -127,7 +126,6 @@ class Interpreter:
             ctx = ArcContext(spark=spark)
         self.ctx = ctx
         self.input_fn = input_fn
-        self.html = html
         # reference parity (ArcInterpreter.scala:520-526): the KERNEL
         # restarts Spark when %conf master changes; a library session
         # keeps its JVM unless the embedder opts in
@@ -175,26 +173,19 @@ class Interpreter:
                 duration_s=_int(args.get("streamingDuration"), conf.streaming_duration),
                 frequency_ms=conf.streaming_frequency_ms,
             )
-        kwargs = dict(
-            num_rows=num_rows,
-            max_num_rows=conf.max_num_rows,
-            truncate=truncate,
-        )
-        text = render_text(df, **kwargs)
+        # one fetch feeds both forms, so text and HTML show the same rows
+        header, body = take_formatted(df, num_rows, conf.max_num_rows, truncate)
+        text = render_text(header, body)
         if _bool(args.get("showLog"), conf.show_log):
             last = self.log_buffer.last_message()
             if last:
                 text = f"{text}\n{last}"
-        html = (
-            render_html(
-                df,
-                monospace=_bool(args.get("monospace"), conf.monospace),
-                left_align=_bool(args.get("leftAlign"), conf.left_align),
-                label=label if _bool(args.get("datasetLabels"), conf.dataset_labels) else None,
-                **kwargs,
-            )
-            if self.html
-            else None
+        html = render_html(
+            header,
+            body,
+            monospace=_bool(args.get("monospace"), conf.monospace),
+            left_align=_bool(args.get("leftAlign"), conf.left_align),
+            label=label if _bool(args.get("datasetLabels"), conf.dataset_labels) else None,
         )
         return CellResult(df=df, text=text, html=html)
 
@@ -298,7 +289,7 @@ class Interpreter:
             raise ValueError("%plan expects a view name on the next line")
         df = self.ctx.table(view)
         findings = analyze(df)
-        return CellResult(text=report(df), data=[f.__dict__ for f in findings])
+        return CellResult(text=report(df, findings), data=[f.__dict__ for f in findings])
 
     def magic_metadatafilter(self, args: dict[str, str], body: str) -> CellResult:
         stages = parse_pipeline([{
@@ -427,21 +418,11 @@ class Interpreter:
         they would otherwise keep running untracked after the swap.
 
         The factory receives ``(master, old_session)`` so it can stop
-        exactly this interpreter's session; legacy single-argument
-        factories (tests predating the contract) still work.
+        exactly this interpreter's session.
         """
-        import inspect
-
         old = self.ctx
         old.stop_streams()
-        try:
-            n_params = len(inspect.signature(self.session_factory).parameters)
-        except (TypeError, ValueError):  # builtins / C callables
-            n_params = 2
-        if n_params >= 2:
-            spark = self.session_factory(master, old.spark)
-        else:
-            spark = self.session_factory(master)
+        spark = self.session_factory(master, old.spark)
         self.ctx = ArcContext(
             spark=spark,
             env=old.env,

@@ -160,8 +160,7 @@ def analyze(df: DataFrame) -> list[Finding]:
     return out
 
 
-def report(df: DataFrame) -> str:
-    """Human-readable advisor report + the formatted plan (the single
-    rendering ``%plan`` uses)."""
-    lines = [str(f) for f in analyze(df)]
-    return "\n".join(lines) + "\n\n" + _plan_string(df)
+def report(df: DataFrame, findings: list[Finding]) -> str:
+    """Human-readable report of *findings* (from :func:`analyze` on
+    *df*) + the formatted plan (the single rendering ``%plan`` uses)."""
+    return "\n".join(str(f) for f in findings) + "\n\n" + _plan_string(df)

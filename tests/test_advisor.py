@@ -52,7 +52,7 @@ def test_unbounded_collect_flagged(spark):
 
 def test_plan_magic_renders_findings(spark):
     ctx = ArcContext(spark)
-    interp = Interpreter(ctx=ctx, html=False)
+    interp = Interpreter(ctx=ctx)
     spark.range(50).createOrReplaceTempView("adv_view")
     res = interp.execute("%plan\nadv_view")
     assert "clean" in res.text and "== Physical Plan ==" not in res.text

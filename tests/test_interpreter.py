@@ -1,6 +1,8 @@
 """Cell-language tests: magic dispatch, options, env/secret/conf,
 placeholder view lifecycle (reference semantics per SURVEY.md §2.A)."""
 
+import re
+
 import pytest
 
 from arc_jupyter_spark.context import PLACEHOLDER_VIEW
@@ -194,7 +196,7 @@ def test_conf_master_restarts_kernel_session(spark):
 
     calls = []
 
-    def fake_factory(master):
+    def fake_factory(master, old_session):
         calls.append(master)
         return spark
 
@@ -264,3 +266,64 @@ def test_conf_master_restart_stops_streams_and_old_session(spark):
     assert not q.isActive
     # user_data (lastView, stream registry) does not survive a restart
     assert "streaming_queries" not in interp.ctx.user_data
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run *fn* under Spark job group *group*; return its result and the
+    number of jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _text_rows(text):
+    lines = [ln for ln in text.splitlines() if ln.startswith("|")]
+    rows = [[v.strip() for v in ln.strip("|").split("|")] for ln in lines]
+    return rows[0], rows[1:]
+
+
+def _html_rows(html):
+    rows = [re.findall(r"<t[hd]>(.*?)</t[hd]>", tr)
+            for tr in re.findall(r"<tr>(.*?)</tr>", html)]
+    return rows[0], rows[1:]
+
+
+ONE_TAKE_CELLS = {
+    "aggregate": "%sql\nSELECT id % 7 AS k, count(*) AS n FROM one_take_src GROUP BY 1",
+    "preview": "%sql\nSELECT * FROM one_take_src LIMIT 5",
+    "metadata": "%metadata\none_take_src",
+}
+
+
+@pytest.mark.parametrize("kind", ONE_TAKE_CELLS)
+def test_rendered_cell_takes_rows_once(interp, kind):
+    """A rendered cell runs exactly the jobs of one take_formatted on
+    its DataFrame: text and HTML are formatted from the same rows."""
+    from arc_jupyter_spark.render import take_formatted
+
+    spark = interp.ctx.spark
+    spark.range(0, 1000, 1, 4).createOrReplaceTempView("one_take_src")
+    res, cell_jobs = _jobs_in_group(
+        spark, f"one-take-cell-{kind}", lambda: interp.execute(ONE_TAKE_CELLS[kind])
+    )
+    _, take_jobs = _jobs_in_group(
+        spark, f"one-take-ref-{kind}", lambda: take_formatted(res.df, interp.ctx.conf.num_rows)
+    )
+    assert take_jobs >= 1
+    assert cell_jobs == take_jobs
+    assert res.text and res.html
+
+
+def test_unordered_limit_text_and_html_agree(interp):
+    spark = interp.ctx.spark
+    spark.range(0, 1000, 1, 4).createOrReplaceTempView("unordered_src")
+    res = interp.execute("%sql\nSELECT id, id * 2 AS twice FROM unordered_src LIMIT 15")
+    header, rows = _text_rows(res.text)
+    assert header == ["id", "twice"] and len(rows) == 15
+    assert _html_rows(res.html) == (header, rows)

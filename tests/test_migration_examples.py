@@ -20,7 +20,7 @@ def _blocks():
 @pytest.fixture()
 def interp(spark):
     ctx = ArcContext(spark)
-    return Interpreter(ctx=ctx, html=False)
+    return Interpreter(ctx=ctx)
 
 
 def _strip(block: str) -> str:

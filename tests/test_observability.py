@@ -84,6 +84,19 @@ def test_show_log_appends_message(ctx):
     assert "captured" in res.text
 
 
+def test_interpreters_share_one_log_buffer(ctx):
+    logger = logging.getLogger("arc_jupyter_spark")
+    first = Interpreter(ctx=ctx)
+    interp = Interpreter(ctx=ctx)
+    buffers = [h for h in logger.handlers if isinstance(h, LogBuffer)]
+    assert buffers == [first.log_buffer] and interp.log_buffer is first.log_buffer
+    interp.execute(
+        "%log\nSELECT to_json(named_struct('message','shared')) AS message"
+    )
+    res = interp.execute("%sql showLog=true\nSELECT 1 AS a")
+    assert "shared" in res.text
+
+
 def test_tf_serving_transform_with_injected_predictor(ctx):
     from arc_jupyter_spark.operators.transform import TensorFlowServingTransform
 

@@ -9,6 +9,7 @@ from arc_jupyter_spark.render import (
     dedupe_columns,
     flatten_schema,
     render_html,
+    render_text,
     take_formatted,
 )
 
@@ -76,12 +77,22 @@ def test_row_cap(spark):
     assert len(body) == 3
 
 
-def test_html_escapes_and_css(spark):
-    df = spark.sql("SELECT '<b>&' AS v")
-    html = render_html(df, monospace=True, left_align=True, label="lbl")
+def test_html_escapes_and_css():
+    html = render_html(["v"], [["<b>&"]], monospace=True, left_align=True, label="lbl")
     assert "&lt;b&gt;&amp;" in html
     assert "monospace" in html and "text-align:left" in html
     assert "<caption>lbl</caption>" in html
+
+
+def test_text_table_pads_to_widest_value():
+    assert render_text(["id", "v"], [["1", "long"], ["22", "x"]]).splitlines() == [
+        "+----+------+",
+        "| id | v    |",
+        "+----+------+",
+        "| 1  | long |",
+        "| 22 | x    |",
+        "+----+------+",
+    ]
 
 
 def test_flatten_schema_nested_and_escaped(spark):
